@@ -249,3 +249,102 @@ def test_zuck_empty_singleton_and_chains():
     _check_zuck([(x, lst) for x in range(30)], 30)
     _check_zuck([(50, [1, 2, 3, 4, 5, 10, 20]),
                  (51, [1, 2, 3, 4, 5, 10, 20])], 60)
+
+
+# ---------------------------------------------------------------------------
+# lanes decode: only the requested lists plus their reference closure
+# ---------------------------------------------------------------------------
+
+
+def _encoder_and_decoder(codec):
+    from webgraph_spark import bvdecode
+    from webgraph_spark.bvgraph_huffman import encode_graph_huffman
+    from webgraph_spark.zuckerli import encode_graph_zuckerli
+
+    return {
+        "bv": (encode_graph, bvdecode.decode_block),
+        "huff": (encode_graph_huffman, bvdecode.decode_block_huff),
+        "zuck": (encode_graph_zuckerli, bvdecode.decode_block_zuck),
+    }[codec]
+
+
+def _check_lanes(codec, adj, n, base=0, extra_lanes=()):
+    """Every lanes decode equals the matching slices of the whole-block
+    decode: random subsets of several sizes plus the given lanes."""
+    encode, decode = _encoder_and_decoder(codec)
+    stream, offs, out = encode(adj, n, node_base=base)
+    src, dst = decode(stream, offs, base, n, out)
+    indptr = np.searchsorted(src, base + np.arange(n + 1))
+    rng = np.random.default_rng(n)
+    subsets = [np.sort(rng.choice(n, size=s, replace=False))
+               for s in {1, 3, max(n // 5, 1), n}]
+    subsets += [np.array(sorted(ls), dtype=np.int64) for ls in extra_lanes]
+    for lanes in subsets:
+        s2, d2 = decode(stream, offs, base, n, out, lanes=lanes)
+        want = np.concatenate([dst[indptr[k]:indptr[k + 1]] for k in lanes])
+        assert np.array_equal(d2, want), (codec, lanes[:8])
+        assert np.array_equal(
+            s2, np.repeat(base + lanes, np.diff(indptr)[lanes]))
+
+
+@pytest.mark.parametrize("codec", ["bv", "huff", "zuck"])
+@pytest.mark.parametrize("base", [0, 777])
+def test_lanes_match_whole_block_random(codec, base):
+    _check_lanes(codec, _random_adj(300, 6, 3, base=base), 300, base=base)
+
+
+@pytest.mark.parametrize("codec", ["bv", "huff", "zuck"])
+def test_lanes_ref_chains_at_max_ref_count(codec):
+    # identical lists: every list references its predecessor until the
+    # chain hits max_ref_count, so a lone lane pulls in a whole chain
+    lst = sorted({3, 9, 17, 40, 41, 42, 43, 44, 80, 99})
+    adj = [(x, lst) for x in range(30)]
+    _check_lanes(codec, adj, 30, extra_lanes=[[29], [3, 7], [0, 29]])
+
+
+@pytest.mark.parametrize("codec", ["bv", "huff", "zuck"])
+def test_lanes_empty_lists_and_hub_tail(codec):
+    rng = np.random.default_rng(5)
+    hub = sorted(set(rng.integers(0, 100000, 8000).tolist())
+                 | set(range(5000, 5300)))
+    adj = [(0, hub)] + [
+        (x, sorted(set(rng.integers(0, 100000, 5).tolist())))
+        for x in range(1, 200) if x % 3
+    ]
+    # lanes of empty lists only, the hub alone, the hub with short lists
+    _check_lanes(codec, adj, 200,
+                 extra_lanes=[[3, 6, 9], [0], [0] + list(range(1, 200, 2))])
+
+
+@pytest.mark.parametrize("codec", ["bv", "huff", "zuck"])
+def test_lanes_web_like_reference_heavy(codec):
+    rng = np.random.default_rng(9)
+    adj = []
+    for x in range(400):
+        succ = set(int(v) for v in np.clip(
+            x + rng.integers(-15, 16, rng.integers(1, 12)), 0, 399))
+        if rng.random() < 0.5:
+            succ |= set(range(x, min(x + int(rng.integers(4, 20)), 400)))
+        adj.append((x, sorted(succ)))
+    _check_lanes(codec, adj, 400)
+
+
+def test_closure_bounded_by_max_ref_count():
+    from webgraph_spark.bvdecode import _closure
+
+    # node i references i - 1 for i % 4 != 0: chains of length 3
+    ref = np.array([0 if i % 4 == 0 else 1 for i in range(12)])
+    reads = []
+
+    def headers(rows):
+        reads.append(rows.tolist())
+        return np.ones(rows.size, np.int64), ref[rows], np.zeros(rows.size, np.int64)
+
+    rows, deg, r, P, tref = _closure(headers, np.array([7, 9]), 3)
+    assert rows.tolist() == [4, 5, 6, 7, 8, 9]
+    # the lanes, then one read per chain level: max_ref_count of them
+    assert reads == [[7, 9], [6, 8], [5], [4]]
+    assert (rows[tref] == rows - r).all()
+    # a chain longer than max_ref_count is a malformed block
+    with pytest.raises(ValueError):
+        _closure(headers, np.array([7]), 2)

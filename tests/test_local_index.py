@@ -5,6 +5,7 @@ harness analogs)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from webgraph_spark.codec import (
     adjacency_byte_offsets,
@@ -170,3 +171,126 @@ def test_entropy_codec_indexes_match_csr_index(spark, small_graph):
                 k.successors(int(x)), idx.successors(int(x))
             ), f"{codec} mismatch at node {x}"
             assert k.outdegree(int(x)) == idx.outdegree(int(x))
+
+
+# ---------------------------------------------------------------------------
+# batch_successors: unique ids -> per-block decode of just those lists
+# ---------------------------------------------------------------------------
+
+
+def _web_edges(n=1200, seed=4):
+    """Locality-heavy digraph (copied neighbourhoods, runs, a hub) so the
+    entropy codecs emit reference chains, intervals and long lists."""
+    rng = np.random.default_rng(seed)
+    adj = {}
+    for x in range(n):
+        if rng.random() < 0.2:
+            continue  # empty list
+        succ = set(((x + rng.integers(-30, 30, rng.integers(1, 10))) % n).tolist())
+        if rng.random() < 0.5:
+            s = int(rng.integers(0, n - 20))
+            succ |= set(range(s, s + int(rng.integers(4, 16))))
+        if x > 0 and rng.random() < 0.4 and adj.get(x - 1):
+            succ |= set(adj[x - 1])
+        succ.discard(x)
+        adj[x] = sorted(succ)
+    adj[17] = sorted(set(range(0, n, 2)) - {17})  # hub
+    src = np.concatenate([np.full(len(v), k) for k, v in sorted(adj.items())])
+    dst = np.concatenate([v for _, v in sorted(adj.items())])
+    return n, src.astype(np.int64), dst.astype(np.int64)
+
+
+def _block_rows(codec, src, dst, n_blocks=4):
+    """Blocks over contiguous src ranges, packed by the same kernels
+    build_csr* run inside Spark."""
+    import pyarrow as pa
+
+    from webgraph_spark import csr
+
+    pack = {"varint": csr._pack_partition, "bv": csr._pack_partition_bv,
+            "huff": csr._pack_partition_huff,
+            "zuck": csr._pack_partition_zuck}[codec]
+    cuts = np.searchsorted(src, np.linspace(0, src.max() + 1, n_blocks + 1))
+    rows = []
+    for s, e in zip(cuts[:-1], cuts[1:]):
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(src[s:e]), pa.array(dst[s:e])], names=["src", "dst"])
+        for out in pack(iter([batch])):
+            rows.extend(out.to_pylist())
+    return rows
+
+
+@pytest.fixture(scope="module")
+def web():
+    """(n, src, dst, block rows per codec) of _web_edges."""
+    n, src, dst = _web_edges()
+    return n, src, dst, {c: _block_rows(c, src, dst)
+                         for c in ("varint", "bv", "huff", "zuck")}
+
+
+def _index(rows, codec, ef=False):
+    from webgraph_spark.local_index import BvLocalIndex
+
+    if codec == "varint":
+        return CsrLocalIndex(rows[codec], ef_offsets=ef)
+    return BvLocalIndex(rows[codec], codec=codec)
+
+
+def _batches(n, lo, hi):
+    rng = np.random.default_rng(21)
+    sparse = rng.choice(n, 25, replace=False)
+    return {
+        "sparse": sparse,
+        "duplicates": np.concatenate([sparse, sparse[::-1], [17, 17, 17]]),
+        "out_of_range": np.array([-5, -1, 0, n - 1, n, n + 40, 10**9, 5]),
+        "whole_block": np.arange(lo, hi + 1),
+        "dense_random": rng.integers(0, n, 3000),
+        "empty": np.empty(0, dtype=np.int64),
+    }
+
+
+@pytest.mark.parametrize("codec", ["varint", "bv", "huff", "zuck"])
+def test_batch_successors_matches_point_queries(web, codec):
+    n, src, dst, rows = web
+    truth = np.split(dst, np.searchsorted(src, np.arange(1, n)))
+    block = rows[codec][1]
+    idx = _index(rows, codec)
+    for name, xs in _batches(n, block["node_lo"], block["node_hi"]).items():
+        counts, flat = idx.batch_successors(xs)
+        assert counts.shape == (len(xs),), name
+        want = [idx.successors(int(x)) for x in xs]
+        assert counts.tolist() == [w.size for w in want], (codec, name)
+        assert np.array_equal(
+            flat, np.concatenate(want) if want else np.empty(0)), (codec, name)
+        for x, w in zip(xs.tolist(), want):
+            assert np.array_equal(w, truth[x] if 0 <= x < n else []), (codec, x)
+        # the batch path fills no whole-block cache: its working memory
+        # ends with the call
+        assert idx._dec_cache == {}, (codec, name)
+
+
+def test_batch_successors_ef_offsets_matches_plain(web):
+    n, _, _, rows = web
+    plain, ef = _index(rows, "varint"), _index(rows, "varint", ef=True)
+    for name, xs in _batches(n, 0, 99).items():
+        c1, f1 = plain.batch_successors(xs)
+        c2, f2 = ef.batch_successors(xs)
+        assert np.array_equal(c1, c2) and np.array_equal(f1, f2), name
+    assert ef._dec_cache == {}
+
+
+@pytest.mark.parametrize("codec", ["varint", "bv", "huff", "zuck"])
+def test_batch_successors_after_successors_cached(web, codec):
+    # a block warmed by successors_cached serves the batch from its
+    # cache; the cold blocks still decode just the queried lists
+    n, _, _, rows = web
+    xs = np.random.default_rng(3).integers(0, n, 2000)
+    cold_counts, cold_flat = _index(rows, codec).batch_successors(xs)
+    idx = _index(rows, codec)
+    warm_block = rows[codec][2]
+    idx.successors_cached(int(warm_block["node_lo"]))
+    assert list(idx._dec_cache) == [2]
+    counts, flat = idx.batch_successors(xs)
+    assert np.array_equal(counts, cold_counts)
+    assert np.array_equal(flat, cold_flat)
+    assert list(idx._dec_cache) == [2]

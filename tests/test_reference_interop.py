@@ -31,13 +31,21 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "scripts", "interop"))
 
+from build_reference import REF_DIR
 from webgraph_spark.bvgraph import load_bvgraph, store_bvgraph
 from webgraph_spark.bvgraph_huffman import load_huffgraph, store_huffgraph
 from webgraph_spark.zuckerli import load_zuckerli, store_zuckerli
 
-pytestmark = pytest.mark.skipif(
-    shutil.which("cargo") is None, reason="cargo not available"
-)
+# both halves of the build are required: the toolchain and the
+# reference's source tree (WGS_REFERENCE_DIR)
+pytestmark = [
+    pytest.mark.skipif(shutil.which("cargo") is None,
+                       reason="cargo not available"),
+    pytest.mark.skipif(
+        not os.path.isdir(REF_DIR),
+        reason=f"reference tree {REF_DIR} not found (set WGS_REFERENCE_DIR)",
+    ),
+]
 
 
 @pytest.fixture(scope="module")

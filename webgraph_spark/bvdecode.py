@@ -21,6 +21,13 @@ block with numpy:
   list of the level in a single sort pass — no per-list Python in the
   hot path.
 
+Every decoder also takes `lanes`, a sorted array of in-block node
+indices, for random access (local_index batches): it reads the lanes'
+outdegree + reference headers, closes the set under references in at
+most max_ref_count rounds of batched header reads, and runs the same
+lockstep over just that closure, resolving each `x - ref` target
+through a row lookup. lanes=None is the whole block, by the same code.
+
 Decoding semantics mirror bvgraph.BVGraphReader._read_list /
 _encode_list exactly (ref bvgraph.rs:732-978) and are verified
 bit-for-bit against the scalar reader by tests/test_bvdecode.py.
@@ -251,11 +258,20 @@ class _BVCodes:
     def outdegrees(self, P, nodes):
         return self.vb.gamma(P)
 
+    def _gamma_run(self, P, counts):
+        vb = self.vb
+
+        def tail(pos, nrem, _lane):
+            vb.scalar.position(pos)
+            return [vb.scalar.read_gamma() for _ in range(nrem)], vb.scalar.pos
+
+        return vb.run(P, counts, lambda q, _ids: vb.gamma(q), scalar_run=tail)
+
     def blocks_run(self, P, counts):
-        return self.vb.run(P, counts, lambda q, _ids: self.vb.gamma(q))
+        return self._gamma_run(P, counts)
 
     def interval_pairs_run(self, P, pc):
-        return self.vb.run(P, 2 * pc, lambda q, _ids: self.vb.gamma(q))
+        return self._gamma_run(P, 2 * pc)
 
     def residuals_run(self, P, counts):
         vb, k = self.vb, self.k
@@ -268,25 +284,45 @@ class _BVCodes:
                       scalar_run=tail)
 
 
-def _huff_luts(stream: bytes, num_contexts: int):
-    """Decode the stream's canonical-Huffman headers into 256-entry
-    (symbol, length) LUTs per context — codes are capped at 8 bits
+def huff_luts(dec):
+    """(dec, SYM, LEN): 256-entry (symbol, code length) LUTs per context
+    of a parsed HuffmanDecoder. Codes are capped at 8 bits
     (huffman.K_MAX_HUFFMAN_BITS), so one gather on the window's top
-    byte decodes any code. Shared by the hybrid-Huffman and Zuckerli
-    lockstep decoders (both formats carry the same header layout)."""
+    byte decodes any code. Canonical codes count up in (length, symbol)
+    order, so a context's codes tile its 256 cells left to right, each
+    taking 2^(8-length) of them: every context fills in one vectorised
+    scatter from the code lengths alone. Shared by the hybrid-Huffman
+    and Zuckerli lockstep decoders (both formats carry the same header
+    layout). Memory: 1 KiB per context."""
+    n_ctx = len(dec.lengths)
+    nbits = np.frombuffer(
+        b"".join(dec.lengths[c] for c in range(n_ctx)), dtype=np.uint8
+    ).reshape(n_ctx, 256)
+    ctx, sym = np.nonzero(nbits)  # ordered by (context, symbol)
+    ln = nbits[ctx, sym].astype(np.int64)
+    # canonical order per context: (length, symbol)
+    order = np.argsort(ctx * 16 + ln, kind="stable")
+    ctx, sym, ln = ctx[order], sym[order], ln[order]
+    span = 1 << (8 - ln)
+    # flat cell of each code's first entry: row start + codes before it
+    cell0 = ctx * 256 + _seg_cumsum(
+        span, np.bincount(ctx, minlength=n_ctx)) - span
+    cells = _segs(cell0, span)
+    SYM = np.full(n_ctx * 256, -1, dtype=np.int16)
+    LEN = np.zeros(n_ctx * 256, dtype=np.int16)
+    SYM[cells] = np.repeat(sym, span)
+    LEN[cells] = np.repeat(ln, span)
+    return dec, SYM.reshape(n_ctx, 256), LEN.reshape(n_ctx, 256)
+
+
+def _stream_luts(vb: _VecBits, num_contexts: int):
+    """huff_luts of the headers at the start of vb's stream."""
     from webgraph_spark.huffman import HuffmanDecoder
 
-    r = BitReader(stream)
     dec = HuffmanDecoder()
-    dec.decode_headers(r, num_contexts)
-    SYM = np.full((num_contexts, 256), -1, dtype=np.int16)
-    LEN = np.zeros((num_contexts, 256), dtype=np.int16)
-    for ctx, tbl in dec.tables.items():
-        for (ln, code), sym in tbl.items():
-            base = code << (8 - ln)
-            SYM[ctx, base: base + (1 << (8 - ln))] = sym
-            LEN[ctx, base: base + (1 << (8 - ln))] = ln
-    return dec, SYM, LEN
+    vb.scalar.position(0)
+    dec.decode_headers(vb.scalar, num_contexts)
+    return huff_luts(dec)
 
 
 def _huff_read(vb: _VecBits, SYM, LEN, P, ctx):
@@ -322,12 +358,12 @@ class _HuffCodes:
     so the step index alone distinguishes first-in-chain.
     """
 
-    def __init__(self, vb: _VecBits, stream: bytes) -> None:
+    def __init__(self, vb: _VecBits, luts) -> None:
         from webgraph_spark import bvgraph_huffman as bh
 
         self.vb = vb
         self.bh = bh
-        self.dec, self.SYM, self.LEN = _huff_luts(stream, bh.NUM_CONTEXTS)
+        self.dec, self.SYM, self.LEN = luts
 
     def _huff(self, P, ctx):
         return _huff_read(self.vb, self.SYM, self.LEN, P, ctx)
@@ -415,50 +451,99 @@ class _HuffCodes:
 
 
 def decode_block(stream: bytes, bit_offsets, node_lo: int, n_nodes: int,
-                 params: BVGraphParams | None = None):
+                 params: BVGraphParams | None = None, lanes=None):
     """Decode one BV block -> (src int64 array, dst int64 array).
 
     Requires the default coding set (see supports()); per-node record
-    starts come from bit_offsets (n_nodes+1 entries).
+    starts come from bit_offsets (n_nodes+1 entries). lanes (sorted,
+    unique in-block node indices) restricts the output to those lists;
+    only they and the lists their reference chains reach are decoded.
+    lanes=None decodes the whole block.
     """
     p = params or BVGraphParams()
     if not supports(p):
         raise ValueError("decode_block requires the default coding set")
     vb = _VecBits(stream)
-    return _drive(vb, _BVCodes(vb, p), bit_offsets, node_lo, n_nodes, p)
+    return _drive(vb, _BVCodes(vb, p), bit_offsets, node_lo, n_nodes, p,
+                  lanes)
 
 
 def decode_block_huff(stream: bytes, bit_offsets, node_lo: int,
-                      n_nodes: int, params: BVGraphParams | None = None):
+                      n_nodes: int, params: BVGraphParams | None = None,
+                      lanes=None, luts=None):
     """Decode one hybrid Huffman-BVGraph block -> (src, dst) arrays.
 
-    Same lockstep driver as decode_block; only the code readers differ
-    (LUT canonical Huffman + Zuckerli tails, chained contexts). Verified
-    bit-for-bit against HuffBVGraphReader by tests/test_bvdecode.py."""
+    Same lockstep driver (and lanes contract) as decode_block; only the
+    code readers differ (LUT canonical Huffman + Zuckerli tails, chained
+    contexts). luts: huff_luts() of the block's already-parsed headers,
+    parsed from the stream when None. Verified bit-for-bit against
+    HuffBVGraphReader by tests/test_bvdecode.py."""
+    from webgraph_spark.bvgraph_huffman import NUM_CONTEXTS
+
     p = params or BVGraphParams()
     vb = _VecBits(stream)
-    return _drive(vb, _HuffCodes(vb, stream), bit_offsets, node_lo,
-                  n_nodes, p)
+    luts = luts or _stream_luts(vb, NUM_CONTEXTS)
+    return _drive(vb, _HuffCodes(vb, luts), bit_offsets, node_lo,
+                  n_nodes, p, lanes)
+
+
+def _segs(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Flat indices of the segments [starts[i], starts[i] + counts[i])."""
+    return np.repeat(starts, counts) + _seg_arange(counts)
+
+
+def _closure(read_headers, lanes, max_ref_count: int):
+    """The rows a lanes decode needs: the lanes plus every list their
+    reference chains reach, closed in at most max_ref_count rounds of
+    batched header reads (the encoders cap chains at max_ref_count).
+
+    read_headers(rows) -> (outdegree, reference, positions after the
+    two headers). Returns (rows sorted, deg, ref, P, tref) with tref the
+    row of each row's reference target (its own row where ref == 0)."""
+    rows = np.asarray(lanes, dtype=np.int64)
+    parts = [(rows, *read_headers(rows))]
+    for reads in range(max_ref_count + 1):
+        last_rows, _, last_ref, _ = parts[-1]
+        new = np.setdiff1d((last_rows - last_ref)[last_ref > 0], rows)
+        if not new.size:
+            break
+        if reads == max_ref_count:
+            raise ValueError("reference chain exceeds max_ref_count")
+        parts.append((new, *read_headers(new)))
+        rows = np.concatenate([rows, new])
+    rows, deg, ref, P = (np.concatenate(col) for col in zip(*parts))
+    order = np.argsort(rows)
+    rows, deg, ref, P = rows[order], deg[order], ref[order], P[order]
+    return rows, deg, ref, P, np.searchsorted(rows, rows - ref)
 
 
 def _drive(vb, codes, bit_offsets, node_lo: int, n_nodes: int,
-           p: BVGraphParams):
+           p: BVGraphParams, lanes=None):
     min_il = p.min_interval_len
     offs = np.asarray(bit_offsets, dtype=np.int64)[:n_nodes]
-    nodes = node_lo + np.arange(n_nodes, dtype=np.int64)
 
     # --- headers: outdegree, reference -------------------------------
-    deg, P = codes.outdegrees(offs, nodes)
-    nz = np.flatnonzero(deg > 0)
-    ref = np.zeros(n_nodes, dtype=np.int64)
-    if p.window_size > 0 and nz.size:
-        ref[nz], P[nz] = vb.unary(P[nz])
+    def read_headers(rows):
+        deg, P = codes.outdegrees(offs[rows], node_lo + rows)
+        ref = np.zeros(rows.size, dtype=np.int64)
+        nz = np.flatnonzero(deg > 0)
+        if p.window_size > 0 and nz.size:
+            ref[nz], P[nz] = vb.unary(P[nz])
+        return deg, ref, P
+
+    rows, deg, ref, P, tref = _closure(
+        read_headers,
+        np.arange(n_nodes, dtype=np.int64) if lanes is None else lanes,
+        p.max_ref_count,
+    )
+    m = rows.size
+    nodes = node_lo + rows
 
     # --- copy blocks -------------------------------------------------
     hasref = np.flatnonzero(ref > 0)
-    bc = np.zeros(n_nodes, dtype=np.int64)
+    bc = np.zeros(m, dtype=np.int64)
     blocks_flat = np.empty(0, dtype=np.int64)
-    blk_starts = np.zeros(n_nodes, dtype=np.int64)
+    blk_starts = np.zeros(m, dtype=np.int64)
     extra = deg.copy()
     if hasref.size:
         bc[hasref], P[hasref] = vb.gamma(P[hasref])
@@ -477,16 +562,16 @@ def _drive(vb, codes, bit_offsets, node_lo: int, n_nodes: int,
             seg_ids, weights=blocks_flat * (parity == 0),
             minlength=hasref.size,
         ).astype(np.int64)
-        ref_deg = deg[hasref - ref[hasref]]  # window refs stay in-block
+        ref_deg = deg[tref[hasref]]  # window refs stay in-block
         copied = even_sum + np.where(bc[hasref] % 2 == 0,
                                      ref_deg - total_b, 0)
         extra[hasref] = deg[hasref] - copied
 
     # --- intervals ---------------------------------------------------
-    iv_count = np.zeros(n_nodes, dtype=np.int64)
-    iv_vals = np.empty(0, dtype=np.int64)  # expanded, ordered by node
-    iv_n = np.zeros(n_nodes, dtype=np.int64)  # expanded count per node
-    iv_starts = np.zeros(n_nodes, dtype=np.int64)
+    iv_count = np.zeros(m, dtype=np.int64)
+    iv_vals = np.empty(0, dtype=np.int64)  # expanded, ordered by row
+    iv_n = np.zeros(m, dtype=np.int64)  # expanded count per row
+    iv_starts = np.zeros(m, dtype=np.int64)
     if min_il != 0:
         has_x = np.flatnonzero(extra > 0)
         if has_x.size:
@@ -513,7 +598,7 @@ def _drive(vb, codes, bit_offsets, node_lo: int, n_nodes: int,
             # expand every interval once, globally
             iv_vals = np.repeat(lefts, lens) + _seg_arange(lens)
             per_node = np.bincount(
-                np.repeat(has_iv, pc), weights=lens, minlength=n_nodes
+                np.repeat(has_iv, pc), weights=lens, minlength=m
             ).astype(np.int64)
             iv_n = per_node
             iv_starts[has_iv] = _seg_starts(per_node[has_iv])
@@ -522,7 +607,7 @@ def _drive(vb, codes, bit_offsets, node_lo: int, n_nodes: int,
     # --- residuals ---------------------------------------------------
     res_count = np.maximum(extra, 0)
     res_vals = np.empty(0, dtype=np.int64)
-    res_starts = np.zeros(n_nodes, dtype=np.int64)
+    res_starts = np.zeros(m, dtype=np.int64)
     has_res = res_count > 0
     if has_res.any():
         rc = res_count[has_res]
@@ -548,20 +633,15 @@ def _drive(vb, codes, bit_offsets, node_lo: int, n_nodes: int,
         if d > max(p.max_ref_count, 1) + 1:
             raise ValueError("reference chain exceeds max_ref_count")
         pend = np.flatnonzero(depth < 0)
-        ready = depth[pend - ref[pend]] == d - 1
+        ready = depth[tref[pend]] == d - 1
         depth[pend[ready]] = d
-
-    def _slices_flat(node_idx, starts_arr, counts_arr):
-        """Gather per-node segments [starts[i], starts[i]+counts[i])."""
-        c = counts_arr[node_idx]
-        return np.repeat(starts_arr[node_idx], c) + _seg_arange(c)
 
     # depth 0, no intervals: pure-residual lists, one straight scatter
     simple = (depth == 0) & (iv_n == 0) & (deg > 0)
     if simple.any():
         sidx = np.flatnonzero(simple)
-        dst[_slices_flat(sidx, out_starts[:-1], deg)] = res_vals[
-            _slices_flat(sidx, res_starts, res_count)
+        dst[_segs(out_starts[sidx], deg[sidx])] = res_vals[
+            _segs(res_starts[sidx], res_count[sidx])
         ]
 
     for level in range(0, d + 1):
@@ -573,11 +653,11 @@ def _drive(vb, codes, bit_offsets, node_lo: int, n_nodes: int,
         parts, ids = [], []
         if level > 0:
             # copy selection over the (already final) referenced lists
-            tgt = lv - ref[lv]
-            ref_flat = dst[_slices_flat(tgt, out_starts[:-1], deg)]
+            tgt = tref[lv]
+            ref_flat = dst[_segs(out_starts[tgt], deg[tgt])]
             # mask: alternating copy/skip blocks + implicit tail block
             nb = bc[lv]
-            blks = blocks_flat[_slices_flat(lv, blk_starts, bc)]
+            blks = blocks_flat[_segs(blk_starts[lv], nb)]
             tail = deg[tgt] - np.bincount(
                 np.repeat(np.arange(lv.size), nb), weights=blks,
                 minlength=lv.size,
@@ -595,25 +675,33 @@ def _drive(vb, codes, bit_offsets, node_lo: int, n_nodes: int,
             n_cop = deg[lv] - iv_n[lv] - res_count[lv]
             ids.append(np.repeat(lv, n_cop))
         if iv_n[lv].any():
-            parts.append(iv_vals[_slices_flat(lv, iv_starts, iv_n)])
+            parts.append(iv_vals[_segs(iv_starts[lv], iv_n[lv])])
             ids.append(np.repeat(lv, iv_n[lv]))
         if res_count[lv].any():
-            parts.append(res_vals[_slices_flat(lv, res_starts, res_count)])
+            parts.append(res_vals[_segs(res_starts[lv], res_count[lv])])
             ids.append(np.repeat(lv, res_count[lv]))
         vals = np.concatenate(parts)
         nid = np.concatenate(ids)
-        # group-by-node + sort-by-value in ONE sort pass: fuse the two
-        # keys into one int64 when they fit (ids and values < 2^31 —
+        # group-by-row + sort-by-value in ONE sort pass: fuse the two
+        # keys into one int64 when they fit (rows and values < 2^31 —
         # any realistic block), else fall back to the two-pass lexsort
         vmax = int(vals.max()) if vals.size else 0
         if 0 <= int(vals.min() if vals.size else 0) and vmax < (1 << 31) \
-                and n_nodes < (1 << 31):
+                and m < (1 << 31):
             order = np.argsort((nid << 32) | vals, kind="stable")
         else:
             order = np.lexsort((vals, nid))
-        dst[_slices_flat(lv, out_starts[:-1], deg)] = vals[order]
-    src = np.repeat(nodes, deg)
-    return src, dst
+        dst[_segs(out_starts[lv], deg[lv])] = vals[order]
+    return _lanes_out(rows, nodes, deg, out_starts, dst, lanes)
+
+
+def _lanes_out(rows, nodes, deg, out_starts, dst, lanes):
+    """(src, dst) of the requested lanes out of the decoded rows."""
+    if lanes is not None and rows.size != len(lanes):
+        keep = np.searchsorted(rows, lanes)
+        return (np.repeat(nodes[keep], deg[keep]),
+                dst[_segs(out_starts[keep], deg[keep])])
+    return np.repeat(nodes, deg), dst
 
 
 # ---------------------------------------------------------------------------
@@ -678,14 +766,13 @@ def _zuck_res_lockstep(vb, SYM, LEN, dec, P, degs, nodes, zk, min_il,
         for _ in range(int(rem[j])):
             if f:
                 ld = dec.read_next(r, int(fctx[j]))
-                dest = x + int(_nat2int(np.array([ld]))[0])
+                dest = x + zk.nat2int(ld)
                 f = False
             elif sk > 0:
                 ld = 0
                 dest = rd
             else:
-                c = RES + min(int(_token_vec(np.array([ld]))[0]),
-                              zk.NUM_RESIDUAL_CTX - 1)
+                c = RES + min(zk._token(ld), zk.NUM_RESIDUAL_CTX - 1)
                 ld = dec.read_next(r, c)
                 dest = rd + ld
             if ld == 0 and sk == 0:
@@ -755,35 +842,44 @@ def _zuck_res_lockstep(vb, SYM, LEN, dec, P, degs, nodes, zk, min_il,
 
 
 def decode_block_zuck(stream: bytes, bit_offsets, node_lo: int,
-                      n_nodes: int, params: BVGraphParams | None = None):
+                      n_nodes: int, params: BVGraphParams | None = None,
+                      lanes=None, luts=None):
     """Decode one Zuckerli block -> (src, dst) int64 arrays.
 
     Partial lockstep: reference=0 lists ride _zuck_res_lockstep;
     referenced lists decode scalar in ascending node order with their
     targets resolved from the already-final output (each list decodes
-    exactly once)."""
+    exactly once). lanes and luts as in decode_block_huff: with lanes,
+    only those lists and their reference closure are decoded."""
     from webgraph_spark import zuckerli as zk
 
     p = params or BVGraphParams()
     vb = _VecBits(stream)
-    dec, SYM, LEN = _huff_luts(stream, zk.NUM_CONTEXTS)
+    dec, SYM, LEN = luts or _stream_luts(vb, zk.NUM_CONTEXTS)
     offs = np.asarray(bit_offsets, dtype=np.int64)[:n_nodes]
-    nodes = node_lo + np.arange(n_nodes, dtype=np.int64)
 
     # headers: degree (node-position context), reference (unary)
-    pos32 = nodes % 32
-    dctx = np.where(
-        pos32 == 0,
-        zk.FIRST_DEGREE_CTX,
-        zk.DEGREE_BASE_CTX
-        + np.minimum(_token_vec(pos32), zk.NUM_DEGREE_CTX - 1),
-    )
-    deg, P = _huff_read(vb, SYM, LEN, offs, dctx)
-    ref = np.zeros(n_nodes, dtype=np.int64)
-    nz = np.flatnonzero(deg > 0)
-    if nz.size:
-        ref[nz], P[nz] = vb.unary(P[nz])
+    def read_headers(rows):
+        pos32 = (node_lo + rows) % 32
+        dctx = np.where(
+            pos32 == 0,
+            zk.FIRST_DEGREE_CTX,
+            zk.DEGREE_BASE_CTX
+            + np.minimum(_token_vec(pos32), zk.NUM_DEGREE_CTX - 1),
+        )
+        deg, P = _huff_read(vb, SYM, LEN, offs[rows], dctx)
+        ref = np.zeros(rows.size, dtype=np.int64)
+        nz = np.flatnonzero(deg > 0)
+        if nz.size:
+            ref[nz], P[nz] = vb.unary(P[nz])
+        return deg, ref, P
 
+    rows, deg, ref, P, tref = _closure(
+        read_headers,
+        np.arange(n_nodes, dtype=np.int64) if lanes is None else lanes,
+        p.max_ref_count,
+    )
+    nodes = node_lo + rows
     out_starts = np.concatenate(
         [np.zeros(1, dtype=np.int64), np.cumsum(deg)]
     )
@@ -795,33 +891,18 @@ def decode_block_zuck(stream: bytes, bit_offsets, node_lo: int,
             vb, SYM, LEN, dec, P[lv], deg[lv], nodes[lv], zk,
             p.min_interval_len,
         )
-        idx = np.repeat(out_starts[lv], deg[lv]) + _seg_arange(deg[lv])
-        dst[idx] = vals
+        dst[_segs(out_starts[lv], deg[lv])] = vals
 
     rv = np.flatnonzero(ref > 0)
     if rv.size:
         reader = zk.ZuckerliReader.__new__(zk.ZuckerliReader)
-        reader.reader = BitReader(stream)
-        reader.offsets = np.concatenate([offs, np.zeros(1, dtype=np.int64)])
         reader.p = p
-        reader.node_base = node_lo
         reader.huff = dec
-
-        def resolve(y: int):
-            i = y - node_lo
-            if ref[i] == 0 or i not in pending:
-                lst = dst[out_starts[i]: out_starts[i + 1]].tolist()
-                return len(lst), lst
-            raise ValueError("reference target decoded after its user")
-
-        pending = set(int(i) for i in rv)
-        for i in rv:  # ascending: targets (y < x) are always final
-            x = int(node_lo + i)
-            r = reader.reader.fork()
-            r.position(int(offs[i]))
-            lst = reader._read_list(x, r, resolve)
-            dst[out_starts[i]: out_starts[i + 1]] = lst
-            pending.discard(int(i))
-
-    src = np.repeat(nodes, deg)
-    return src, dst
+        r = vb.scalar
+        for i in rv.tolist():  # ascending: targets (y < x) are final
+            t = int(tref[i])
+            target = dst[out_starts[t]: out_starts[t + 1]].tolist()
+            r.position(int(offs[rows[i]]))
+            dst[out_starts[i]: out_starts[i + 1]] = reader._read_list(
+                int(nodes[i]), r, lambda _y, t=target: (len(t), t))
+    return _lanes_out(rows, nodes, deg, out_starts, dst, lanes)

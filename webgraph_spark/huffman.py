@@ -170,6 +170,9 @@ class HuffmanDecoder:
         # and value: canonical codes are prefix-free but code VALUES can
         # coincide across lengths
         self.tables: dict[int, dict[tuple[int, int], int]] = {}
+        # lengths[ctx] = code length of each symbol (0 = absent), one
+        # byte per symbol — what vectorised table builders read
+        self.lengths: dict[int, bytes] = {}
 
     def decode_headers(self, r: BitReader, num_contexts: int) -> None:
         for ctx in range(num_contexts):
@@ -178,6 +181,7 @@ class HuffmanDecoder:
             for s in range(ms + 1):
                 if r.read_int(1):
                     nbits[s] = r.read_int(3) + 1
+            self.lengths[ctx] = bytes(nbits)
             bits = compute_symbol_bits(nbits)
             self.tables[ctx] = {
                 (nbits[s], bits[s]): s for s in range(K_NUM_SYMBOLS) if nbits[s]

@@ -13,9 +13,14 @@ per-node byte_offsets array — same asymptotics as the reference, in
 numpy.
 
 `batch_successors` amortizes Python dispatch over a whole query array
-(decode every queried list in a handful of vectorized passes) — the
-mode a feature-serving pipeline would use; `bench_random_queries`
-reproduces the reference's 1M-random-query harness for BENCH.md.
+— the mode a feature-serving pipeline would use — and keeps the
+reference's rule of decoding only what is asked for: the distinct ids
+are decoded once each, block by block (a byte-segment gather for
+varint; a lanes decode of just those lists and their reference closure
+for BV / Huffman / Zuckerli, bvdecode), then expanded back to query
+order. It fills no cache; only `successors_cached` keeps whole decoded
+blocks. `bench_random_queries` reproduces the reference's
+1M-random-query harness for BENCH.md.
 """
 
 from __future__ import annotations
@@ -24,7 +29,32 @@ import time
 
 import numpy as np
 
+from webgraph_spark.bvdecode import _segs, huff_luts
 from webgraph_spark.codec import decode_one_list, varint_decode, zigzag_decode
+
+
+def _batch(xs, los, his, block_lists) -> tuple[np.ndarray, np.ndarray]:
+    """Bulk random access shared by both indexes: the distinct ids of
+    xs, grouped by block, go through block_lists(b, sorted in-block
+    indices) -> (counts, concatenated lists), and the lists are then
+    expanded back to xs order (a repeated id repeats its list, an id
+    outside every block gets an empty one). Working memory is the
+    distinct lists (plus, for entropy codecs, their reference closure)
+    and the output; nothing outlives the call."""
+    xs = np.asarray(xs, dtype=np.int64).ravel()
+    uq, inv = np.unique(xs, return_inverse=True)
+    ucnt = np.zeros(uq.size, dtype=np.int64)
+    parts = []
+    blk = np.searchsorted(los, uq, side="right") - 1
+    for b in np.unique(blk[blk >= 0]).tolist():
+        s = int(np.searchsorted(uq, los[b]))
+        e = int(np.searchsorted(uq, his[b], side="right"))
+        if s < e:
+            ucnt[s:e], vals = block_lists(b, uq[s:e] - los[b])
+            parts.append(vals)
+    uflat = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+    counts = ucnt[inv]
+    return counts, uflat[_segs((np.cumsum(ucnt) - ucnt)[inv], counts)]
 
 
 class CsrLocalIndex:
@@ -60,6 +90,8 @@ class CsrLocalIndex:
                 sum(a.nbytes for a in self._indptr)
                 + sum(a.nbytes for a in self._boffs)
             )
+        # whole-block decodes, filled only by successors_cached
+        self._dec_cache: dict[int, np.ndarray] = {}
 
     @staticmethod
     def _at(arr, idx):
@@ -86,8 +118,6 @@ class CsrLocalIndex:
         trades 8 bytes/edge of RAM for slice-speed point queries; the
         reference instead re-decodes per query and memoizes only the
         outdegree pointer, bvgraph.rs:40-42,716-729)."""
-        if not hasattr(self, "_dec_cache"):
-            self._dec_cache: dict[int, np.ndarray] = {}
         hit = self._dec_cache.get(i)
         if hit is None:
             from webgraph_spark.codec import decode_adjacency
@@ -136,74 +166,32 @@ class CsrLocalIndex:
 
     def batch_successors(self, xs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Vectorized bulk random access: returns (counts, concatenated
-        successors) aligned with xs. All queried lists are decoded in a
-        few numpy passes per block instead of per-query Python."""
-        xs = np.asarray(xs, dtype=np.int64)
-        counts = np.zeros(xs.size, dtype=np.int64)
-        order = np.argsort(xs, kind="stable")
-        xs_sorted = xs[order]
-        blk = np.searchsorted(self._los, xs_sorted, side="right") - 1
-        per_block: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        for b in np.unique(blk):
-            if b < 0:
-                continue
-            sel = np.flatnonzero(blk == b)
-            in_range = xs_sorted[sel] <= self._his[b]
-            sel = sel[in_range]
-            if sel.size == 0:
-                continue
-            q = xs_sorted[sel]
-            k = q - self._los[b]
-            ip, off, buf = self._indptr[b], self._boffs[b], self._bufs[b]
-            cnt = (self._at(ip, k + 1) - self._at(ip, k)).astype(np.int64)
-            orig_idx = order[sel]
-            counts[orig_idx] = cnt
-            # dense query sets re-decode the same lists many times under
-            # the per-segment gather below; once the queries cover a
-            # meaningful fraction of the block (or the block is already
-            # decoded), one memoized whole-block decode + slices wins
-            n_blk = int(self._his[b] - self._los[b] + 1)
-            if (int(b) in getattr(self, "_dec_cache", {})
-                    or sel.size * 20 >= n_blk):
-                dec = self._decoded_block(int(b))
-                nz = cnt > 0
-                if nz.any():
-                    cnz = cnt[nz]
-                    seg_starts = np.cumsum(cnz) - cnz
-                    intra = (np.arange(int(cnz.sum()), dtype=np.int64)
-                             - np.repeat(seg_starts, cnz))
-                    vals = dec[np.repeat(
-                        np.asarray(self._at(ip, k[nz]), dtype=np.int64), cnz
-                    ) + intra]
-                    per_block.append((orig_idx[nz], cnz, vals))
-                continue
-            off_k = self._at(off, k)
-            seg_lens = (self._at(off, k + 1) - off_k).astype(np.int64)
-            total = int(seg_lens.sum())
-            if total == 0:
-                continue
-            # gather queried segments into one compact byte buffer
-            seg_starts = np.cumsum(seg_lens) - seg_lens
-            intra = np.arange(total, dtype=np.int64) - np.repeat(seg_starts, seg_lens)
-            compact = buf[np.repeat(off_k, seg_lens) + intra]
-            raw = varint_decode(compact)
-            # heads of each nonempty list inside the decoded value array
-            nz = cnt > 0
-            head_pos = np.cumsum(cnt[nz]) - cnt[nz]
-            vals = raw.astype(np.int64) + 1
-            vals[head_pos] = zigzag_decode(raw[head_pos]) + q[nz]
-            csum = np.cumsum(vals)
-            base = csum[head_pos] - vals[head_pos]
-            dsts = csum - np.repeat(base, cnt[nz])
-            per_block.append((orig_idx[nz], cnt[nz], dsts))
-        # scatter decoded lists into xs-aligned layout
-        out_starts = np.cumsum(counts) - counts
-        flat = np.empty(int(counts.sum()), dtype=np.int64)
-        for orig_idx, cnt, dsts in per_block:
-            seg_starts = np.cumsum(cnt) - cnt
-            intra = np.arange(dsts.size, dtype=np.int64) - np.repeat(seg_starts, cnt)
-            flat[np.repeat(out_starts[orig_idx], cnt) + intra] = dsts
-        return counts, flat
+        successors) aligned with xs. Each distinct queried list is
+        decoded once (see _batch); nothing is cached."""
+        return _batch(xs, self._los, self._his, self._block_lists)
+
+    def _block_lists(self, b: int, k: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(counts, concatenated lists) of block b's sorted, unique
+        in-block indices k: sliced from the block's cached decode when
+        successors_cached made one, else the queried byte segments are
+        gathered into one buffer and decoded in a few numpy passes."""
+        ip, off = self._indptr[b], self._boffs[b]
+        first = np.asarray(self._at(ip, k), dtype=np.int64)
+        cnt = np.asarray(self._at(ip, k + 1), dtype=np.int64) - first
+        dec = self._dec_cache.get(b)
+        if dec is not None:
+            return cnt, dec[_segs(first, cnt)]
+        off_k = np.asarray(self._at(off, k), dtype=np.int64)
+        seg_lens = np.asarray(self._at(off, k + 1), dtype=np.int64) - off_k
+        raw = varint_decode(self._bufs[b][_segs(off_k, seg_lens)])
+        # heads of each nonempty list inside the decoded value array
+        nz = cnt > 0
+        head_pos = np.cumsum(cnt[nz]) - cnt[nz]
+        vals = raw.astype(np.int64) + 1
+        vals[head_pos] = zigzag_decode(raw[head_pos]) + self._los[b] + k[nz]
+        csum = np.cumsum(vals)
+        base = csum[head_pos] - vals[head_pos]
+        return cnt, csum - np.repeat(base, cnt[nz])
 
     def bench_random_queries(self, n_queries: int = 1_000_000, seed: int = 7) -> dict:
         """Reference O32 harness analog (main.rs:70-121): uniform random
@@ -278,7 +266,11 @@ class BvLocalIndex:
     point-query surface. A point query random-accesses exactly one list
     via the block's per-node bit_offsets, resolving reference chains
     recursively (bounded by max_ref_count) like the reference's entry
-    point B (bvgraph.rs:732-978; zuckerli_in.rs random access)."""
+    point B (bvgraph.rs:732-978; zuckerli_in.rs random access). A batch
+    decodes its distinct lists plus their reference closure through
+    the numpy lockstep decoders' lanes mode. Memory kept per block: the
+    Huffman decode tables once a batch or a whole-block decode used
+    them, and the whole decoded block once successors_cached touched it."""
 
     def __init__(self, blocks_rows, codec: str = "bv"):
         from webgraph_spark.bvgraph import BVGraphParams
@@ -302,7 +294,10 @@ class BvLocalIndex:
                 self._streams, self._bit_offs, self._params, self._los
             )
         ]
+        self._lockstep = _block_lockstep_decoder(codec)
+        # whole-block decodes, filled only by successors_cached
         self._dec_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._lut_cache: dict[int, tuple] = {}
         self.num_nodes = int(self._his[-1] + 1) if len(rows) else 0
         self.num_arcs = int(sum(r["n_edges"] for r in rows))
         self.compressed_bytes = int(sum(len(b) for b in self._streams))
@@ -335,32 +330,45 @@ class BvLocalIndex:
         block (bvdecode — the same kernel the distributed decode_csr_*
         scans use); after that every list is an array slice. Trades
         ~8 bytes/edge of RAM per touched block, like
-        CsrLocalIndex._decoded_block. Falls back to the scalar reader
-        if the block's coding set has no lockstep driver."""
+        CsrLocalIndex._decoded_block."""
         hit = self._dec_cache.get(i)
         if hit is None:
-            lo = int(self._los[i])
-            n = self._params[i].nodes
-            try:
-                src, dst = _block_lockstep_decoder(self._codec)(
-                    self._streams[i], self._bit_offs[i], lo, n,
-                    self._params[i],
-                )
-                counts = np.bincount(src - lo, minlength=n)
-            except ValueError:  # non-default coding set
-                lists = [
-                    np.asarray(self._readers[i].successors(lo + k),
-                               dtype=np.int64)
-                    for k in range(n)
-                ]
-                counts = np.array([a.size for a in lists], dtype=np.int64)
-                dst = (np.concatenate(lists) if counts.any()
-                       else np.empty(0, dtype=np.int64))
-            indptr = np.concatenate(
-                [np.zeros(1, dtype=np.int64), np.cumsum(counts)]
-            ).astype(np.int64)
+            src, dst = self._decode(i, None)
+            counts = np.bincount(src - int(self._los[i]),
+                                 minlength=self._params[i].nodes)
+            indptr = np.zeros(counts.size + 1, dtype=np.int64)
+            np.cumsum(counts, out=indptr[1:])
             hit = (indptr, dst)
             self._dec_cache[i] = hit
+        return hit
+
+    def _decode(self, i: int, lanes) -> tuple[np.ndarray, np.ndarray]:
+        """Block i's lists at the sorted in-block indices lanes (all of
+        them when None) -> node-grouped (src, dst), through the codec's
+        lockstep decoder; a coding set without one falls back to the
+        scalar reader for just those lists and their reference chains."""
+        lo = int(self._los[i])
+        n = self._params[i].nodes
+        luts = {} if self._codec == "bv" else {"luts": self._luts(i)}
+        try:
+            return self._lockstep(self._streams[i], self._bit_offs[i], lo, n,
+                                  self._params[i], lanes=lanes, **luts)
+        except ValueError:  # non-default coding set
+            ks = np.arange(n, dtype=np.int64) if lanes is None else lanes
+            lists = [np.asarray(self._readers[i].successors(lo + int(k)),
+                                dtype=np.int64) for k in ks]
+            counts = np.array([a.size for a in lists], dtype=np.int64)
+            dst = (np.concatenate(lists) if counts.any()
+                   else np.empty(0, dtype=np.int64))
+            return np.repeat(lo + ks, counts), dst
+
+    def _luts(self, i: int) -> tuple:
+        """Block i's Huffman decode tables, built on first use from the
+        headers its reader already parsed (bvdecode.huff_luts; 1 KiB per
+        context, ~0.2 MiB per block) and kept for the index's lifetime."""
+        hit = self._lut_cache.get(i)
+        if hit is None:
+            hit = self._lut_cache[i] = huff_luts(self._readers[i].huff)
         return hit
 
     def successors_cached(self, x: int) -> np.ndarray:
@@ -376,44 +384,24 @@ class BvLocalIndex:
     def batch_successors(self, xs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """Vectorized bulk random access over entropy-coded blocks:
         returns (counts, concatenated successors) aligned with xs —
-        the same contract as CsrLocalIndex.batch_successors. Touched
-        blocks decode once through the lockstep kernel; per-query work
-        is pure numpy gather/scatter."""
-        xs = np.asarray(xs, dtype=np.int64)
-        counts = np.zeros(xs.size, dtype=np.int64)
-        order = np.argsort(xs, kind="stable")
-        xs_sorted = xs[order]
-        blk = np.searchsorted(self._los, xs_sorted, side="right") - 1
-        per_block: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
-        for b in np.unique(blk):
-            if b < 0:
-                continue
-            sel = np.flatnonzero(blk == b)
-            sel = sel[xs_sorted[sel] <= self._his[b]]
-            if sel.size == 0:
-                continue
-            k = xs_sorted[sel] - self._los[b]
-            indptr, flat = self._decoded_block(int(b))
+        the same contract as CsrLocalIndex.batch_successors. Each
+        distinct queried list is decoded once, together with the lists
+        its reference chain reaches (see _batch); no list is cached."""
+        return _batch(xs, self._los, self._his, self._block_lists)
+
+    def _block_lists(self, b: int, k: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(counts, concatenated lists) of block b's sorted, unique
+        in-block indices k: sliced from the block's cached decode when
+        successors_cached made one, else a lanes decode of just those
+        lists and their reference closure."""
+        hit = self._dec_cache.get(b)
+        if hit is not None:
+            indptr, flat = hit
             cnt = indptr[k + 1] - indptr[k]
-            orig_idx = order[sel]
-            counts[orig_idx] = cnt
-            nz = cnt > 0
-            if not nz.any():
-                continue
-            cnz = cnt[nz]
-            seg_starts = np.cumsum(cnz) - cnz
-            intra = (np.arange(int(cnz.sum()), dtype=np.int64)
-                     - np.repeat(seg_starts, cnz))
-            vals = flat[np.repeat(indptr[k][nz], cnz) + intra]
-            per_block.append((orig_idx[nz], cnz, vals))
-        out_starts = np.cumsum(counts) - counts
-        flat_out = np.empty(int(counts.sum()), dtype=np.int64)
-        for orig_idx, cnt, vals in per_block:
-            seg_starts = np.cumsum(cnt) - cnt
-            intra = (np.arange(vals.size, dtype=np.int64)
-                     - np.repeat(seg_starts, cnt))
-            flat_out[np.repeat(out_starts[orig_idx], cnt) + intra] = vals
-        return counts, flat_out
+            return cnt, flat[_segs(indptr[k], cnt)]
+        src, dst = self._decode(b, k)
+        lo = int(self._los[b])
+        return np.bincount(np.searchsorted(k, src - lo), minlength=k.size), dst
 
     def bench_random_queries(self, n_queries: int = 100_000, seed: int = 7) -> dict:
         rng = np.random.default_rng(seed)
